@@ -34,8 +34,8 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     # ONE Arrow crossing (round 7, guide §4.1): this surface projects six
-    # small fields, so the dedicated narrow UDF (which calls the monolithic
-    # extract_turn — identical whole-turn semantics by construction)
+    # small fields, so the dedicated narrow UDF (a fold over the same stage
+    # table as the split UDFs — identical semantics by construction)
     # replaces the stage-split composition that shipped the core struct out
     # and content/corrected_text back in across four ArrowEvalPython nodes.
     extracted = docs.select(
@@ -639,7 +639,7 @@ def _conv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projected light columns.
     transcripts = docs.select(
         F.col("source").alias("conv_id"),
-        F.col("doc_id").cast("int").alias("turn_idx"),
+        F.col("doc_id").cast("long").alias("turn_idx"),
         F.lit("user").alias("role"),
         _clinical_col().alias("text"),
         F.lit("").alias("tool"),

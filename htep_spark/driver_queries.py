@@ -9106,6 +9106,8 @@ CROSS JOIN inert
 
 
 def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # b = arr[1] below: a second-nearest centroid exists only for K >= 2
+    assert KMEANS_K >= 2, "silhouette needs a second cluster to compare against"
     emb, cents = _kmeans_frames(spark, sf_dir)
     dists = emb.crossJoin(F.broadcast(cents)).select(
         "vec_id", "cid", F.sqrt(_kmeans_d2_col()).alias("d")

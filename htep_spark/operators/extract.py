@@ -8,27 +8,29 @@ because per-item dispatch was too slow). No row-at-a-time Python UDF
 anywhere (BASELINE.json ``input_hint``: "no per-row Python").
 
 Round 7 (optimization guide §4.1 "pass only the columns the function
-needs"): the monolithic per-turn chain is SPLIT into stage-group pandas
-UDFs — core decode+dictionary-correction, segmentation, field extraction,
-classification, entity scan, de-identification — recomposed into the same
+needs"): the per-turn chain is SPLIT into one pandas UDF per stage of
+``reference.STAGES`` — core decode+dictionary-correction, segmentation,
+field extraction, classification, entity scan, de-identification — each
+generated from its table row (input field, function, default, result
+fields and therefore Spark return type), and recomposed into the same
 ``EXTRACTION_RESULT_TYPE`` struct with plain column references, so
 Catalyst's ``SimplifyExtractValueOps`` + column pruning DROP the stage
 UDFs a downstream query never reads (e.g. ``per_conversation_metrics``
-consumes only core-group fields → the fields/classify/entities/deid
+consumes only core-stage fields → the fields/classify/entities/deid
 kernels — ~60% of per-turn CPU — are never evaluated; verified by
-``tests/test_plan_quality.py::test_conv_metrics_prunes_stage_udfs`` and
+``tests/test_plan_quality.py::test_stage_udf_pruning`` and
 ``plans/r07/conv_metrics_after.txt``). Equal UDF expressions are
 deduplicated by ``ExtractPythonUDFs`` (evaluated once), and the full-struct
-query runs every group exactly once in two ArrowEvalPython nodes.
+query runs every stage exactly once in two ArrowEvalPython nodes.
 
-Stage isolation matches the reference DAG (``app/api.py:215-293``): each
-stage group catches its own failure and degrades to that stage's canonical
-defaults — the per-stage isolation the reference implements — with
-``metrics.failed``/``metrics.error`` reporting the core group (payload
-decode + correction), whose fallback equals the whole-turn fallback of
-``reference.extract_turn`` field-for-field. On every gate corpus no stage
-raises, and the recomposition is byte-identical to ``extract_turn``
-(``tests/test_spark_pipeline.py::test_spark_equals_oracle_byte_for_byte``,
+Stage isolation is the one rule of ``reference.run_stage`` on every
+surface (``app/api.py:215-293``): each stage catches its own failure and
+returns its default, downstream stages read whatever their upstream
+returned, and ``metrics.failed``/``metrics.error`` report the core stage
+only. The split UDFs and the whole-turn ``extract_turn_udf`` /
+``flagship_row_udf`` therefore agree row for row even when a stage raises
+(``tests/test_spark_pipeline.py::test_stage_fault_isolation_agrees_across_surfaces``,
+``tests/test_spark_pipeline.py::test_spark_equals_oracle_byte_for_byte``,
 ``tests/test_golden.py``).
 
 The per-worker memo tables (module-level in ``reference``/``textops``)
@@ -39,302 +41,136 @@ shuffle in the hot path.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Dict, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
-    DoubleType,
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
 
-from ..reference import extract_turn
-from ..schema import (
-    CORRECTION_TYPE,
-    ENTITIES_TYPE,
-    EXTRACTED_TYPE,
-    EXTRACTION_RESULT_TYPE,
-    SEGMENT_TYPE,
-)
+from ..reference import STAGES, Stage, extract_turn, run_stage
+from ..schema import EXTRACTION_RESULT_TYPE
 
 __all__ = [
     "extract_turn_udf",
     "extract_transcripts",
-    "corrected_text_udf",
+    "extraction_udfs",
     "deid_udf",
-    "DEID_RESULT_TYPE",
 ]
 
-
-@F.pandas_udf(EXTRACTION_RESULT_TYPE)
-def extract_turn_udf(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """text → full extraction-result struct, one Arrow batch at a time.
-
-    The monolithic single-UDF form — kept as the registered SQL function
-    (``functions/register.py``), the streaming surface and the golden-test
-    oracle harness; ``extract_transcripts`` below uses the prunable
-    stage-group split instead.
-
-    Iterator form so per-worker init (dictionary lookups, regex compiles —
-    the lazy-singleton pattern of ``app/api.py:56-104``) happens once per
-    Python worker process, not per batch.
-    """
-    for series in texts:
-        yield pd.DataFrame(
-            [extract_turn(t if isinstance(t, str) else None) for t in series]
-        )
-
-
-# ---------------------------------------------------------------------------
-# Stage-group UDFs (the prunable split surface)
-# ---------------------------------------------------------------------------
-
-CORE_RESULT_TYPE = StructType(
+FLAGSHIP_ROW_TYPE = StructType(
     [
-        StructField("payload_kind", StringType(), True),
-        StructField("content", StringType(), True),
-        StructField("final_text", StringType(), True),
-        StructField("corrected_text", StringType(), True),
-        StructField("corrections", ArrayType(CORRECTION_TYPE), True),
+        StructField("document_type", StringType(), True),
+        StructField("urgency", StringType(), True),
         StructField("matched_drugs", ArrayType(StringType()), True),
         StructField("matched_diseases", ArrayType(StringType()), True),
-        StructField("blocks_kept", IntegerType(), True),
-        StructField("blocks_dropped", IntegerType(), True),
-        StructField("n_corrections", IntegerType(), True),
-        StructField("content_chars", IntegerType(), True),
-        StructField("failed", BooleanType(), True),
-        StructField("error", StringType(), True),
-    ]
-)
-
-
-def _core_row(text) -> dict:
-    """Payload decode (S1-S3 routing) + T7 dictionary post-processing —
-    the per-turn trunk every downstream stage consumes. On failure the
-    fallback equals ``reference.extract_turn``'s whole-turn fallback for
-    these fields exactly."""
-    from ..dictionaries import (
-        DISEASES_MULTI,
-        DISEASES_SINGLE,
-        DISEASE_SET,
-        DRUGS_MULTI,
-        DRUGS_SINGLE,
-        DRUG_SET,
-    )
-    from ..functions.textops import postprocess
-    from ..reference import _DISEASE_MEMO, _DRUG_MEMO, decode_payload
-
-    if not isinstance(text, str):
-        text = None
-    try:
-        content, payload_kind, kept, dropped = decode_payload(text)
-        final_text = content.strip()
-        post = postprocess(
-            final_text,
-            DRUGS_SINGLE,
-            DRUGS_MULTI,
-            DRUG_SET,
-            DISEASES_SINGLE,
-            DISEASES_MULTI,
-            DISEASE_SET,
-            85.0,
-            _DRUG_MEMO,
-            _DISEASE_MEMO,
-        )
-        corrections = [
-            {
-                "from": c["from"],
-                "to": c["to"],
-                "type": c["type"],
-                "score": int(c["score"]),
-            }
-            for c in post["corrections"]
-        ]
-        return {
-            "payload_kind": payload_kind,
-            "content": content,
-            "final_text": final_text,
-            "corrected_text": post["corrected_text"] if final_text else "",
-            "corrections": corrections,
-            "matched_drugs": post["matched_drugs"],
-            "matched_diseases": post["matched_diseases"],
-            "blocks_kept": kept,
-            "blocks_dropped": dropped,
-            "n_corrections": len(corrections),
-            "content_chars": len(content),
-            "failed": False,
-            "error": None,
-        }
-    except Exception as exc:  # stage isolation: never lose a turn
-        safe = text or ""
-        stripped = safe.strip()
-        return {
-            "payload_kind": "plain",
-            "content": safe,
-            "final_text": stripped,
-            "corrected_text": stripped,
-            "corrections": [],
-            "matched_drugs": [],
-            "matched_diseases": [],
-            "blocks_kept": 0,
-            "blocks_dropped": 0,
-            "n_corrections": 0,
-            "content_chars": len(safe),
-            "failed": True,
-            "error": f"{type(exc).__name__}: {exc}",
-        }
-
-
-@F.pandas_udf(CORE_RESULT_TYPE)
-def extract_core_udf(texts: pd.Series) -> pd.DataFrame:
-    # scalar (non-iterator) form: independent scalar pandas UDFs combine
-    # into ONE ArrowEvalPython node (one Python worker, one row queue per
-    # task) — iterator-form UDFs each get their own node, and six chained
-    # nodes cost ~45% extra wall on the full-struct path (BENCH/r07 notes)
-    return pd.DataFrame([_core_row(t) for t in texts])
-
-
-SEGMENTS_RESULT_TYPE = StructType(
-    [
-        StructField("segments", ArrayType(SEGMENT_TYPE), True),
+        StructField("corrected_text", StringType(), True),
         StructField("n_segments", IntegerType(), True),
     ]
 )
 
 
-@F.pandas_udf(SEGMENTS_RESULT_TYPE)
-def segments_udf(contents: pd.Series) -> pd.DataFrame:
-    """G1/G5 segmentation with char spans over the decoded content.
-    ``n_segments`` is emitted here (not as a JVM ``size()``) so every
-    recomposed struct leaf stays a plain attribute dereference — the
-    condition for CollapseProject/pruning (module docstring)."""
-    from ..functions.segments import segment_document
-
-    def one(content):
-        try:
-            segs = segment_document(content if isinstance(content, str) else "")
-        except Exception:
-            segs = []
-        return {"segments": segs, "n_segments": len(segs)}
-
-    return pd.DataFrame([one(c) for c in contents])
+def _result_field(path: str) -> StructField:
+    """The ``EXTRACTION_RESULT_TYPE`` field at a dotted ``path``."""
+    dtype = EXTRACTION_RESULT_TYPE
+    for name in path.split("."):
+        field = dtype[name]
+        dtype = field.dataType
+    return field
 
 
-def _fields_row(final_text) -> dict:
-    """E1/E2/E5 structured-field extraction + vitals normalization —
-    exactly ``reference._extract_turn_inner``'s extracted block."""
-    from ..functions.extract_fields import extract_record
-    from ..reference import _empty_extracted
-
-    try:
-        extracted = (
-            extract_record(final_text)
-            if isinstance(final_text, str) and final_text
-            else {}
-        )
-        if extracted:
-            vit = extracted.get("vitals") or {}
-            extracted["vitals"] = {
-                "bp": vit.get("bp"),
-                "temp": vit.get("temp"),
-                "pulse": vit.get("pulse"),
-            }
-            return extracted
-        return _empty_extracted()
-    except Exception:
-        return _empty_extracted()
+def _udf_name(stage: Stage) -> str:
+    return "extract_core_udf" if stage.name == "core" else f"{stage.name}_udf"
 
 
-@F.pandas_udf(EXTRACTED_TYPE)
-def fields_udf(finals: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([_fields_row(t) for t in finals])
+def _stage_udf(stage: Stage):
+    """Scalar pandas UDF ``stage.reads`` → the stage's fields: a struct of
+    them, or the field's own type when the stage fills one field."""
+    fields = [_result_field(path) for path in stage.fields]
+    single = fields[0].name if len(fields) == 1 else None
+
+    def udf(values: pd.Series) -> pd.DataFrame:
+        # scalar (non-iterator) form: independent scalar pandas UDFs combine
+        # into ONE ArrowEvalPython node (one Python worker, one row queue per
+        # task) — iterator-form UDFs each get their own node, and six chained
+        # nodes cost ~45% extra wall on the full-struct path (BENCH/r07 notes)
+        outs = [run_stage(stage, v if isinstance(v, str) else "") for v in values]
+        return pd.DataFrame([o[single] for o in outs] if single else outs)
+
+    udf.__name__ = _udf_name(stage)
+    return F.pandas_udf(fields[0].dataType if single else StructType(fields))(udf)
 
 
-CLS_RESULT_TYPE = StructType(
-    [
-        StructField("document_type", StringType(), True),
-        StructField("doc_confidence", DoubleType(), True),
-        StructField("keywords_found", ArrayType(StringType()), True),
-        StructField(
-            "secondary_types",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("document_type", StringType(), True),
-                        StructField("confidence", DoubleType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-        StructField("urgency", StringType(), True),
-        StructField("urgency_confidence", DoubleType(), True),
-    ]
-)
+def extraction_udfs(stages: Tuple[Stage, ...]) -> Dict[str, object]:
+    """Every extraction pandas UDF over one stage table, keyed by name: one
+    per stage, plus ``extract_turn_udf`` and ``flagship_row_udf``, which
+    fold the whole table per turn. The module's UDFs are
+    ``extraction_udfs(reference.STAGES)``; the table travels to the Python
+    workers inside each UDF's closure."""
+    udfs = {_udf_name(stage): _stage_udf(stage) for stage in stages}
 
+    def extract_turn_udf(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        """text → full extraction-result struct, one Arrow batch at a time.
 
-def _cls_row(corrected) -> dict:
-    """C1 classification + C2 urgency over the corrected text, in the
-    reference chain order (classify, then urgency)."""
-    from ..functions.classify import classify_document, document_urgency
+        The whole-turn single-UDF form — the registered SQL function
+        (``functions/register.py``), the streaming surface and the
+        golden-test oracle harness; ``extract_transcripts`` below uses the
+        prunable per-stage split instead.
 
-    try:
-        if not isinstance(corrected, str):
-            corrected = ""
-        cls = classify_document(corrected)
-        urgency, urgency_conf = document_urgency(corrected)
-        return {
-            "document_type": cls["document_type"],
-            "doc_confidence": float(cls["confidence"]),
-            "keywords_found": cls["keywords_found"],
-            "secondary_types": cls["secondary_types"],
-            "urgency": urgency,
-            "urgency_confidence": float(urgency_conf),
-        }
-    except Exception:
-        return {
-            "document_type": "unknown",
-            "doc_confidence": 0.0,
-            "keywords_found": [],
-            "secondary_types": [],
-            "urgency": "routine",
-            "urgency_confidence": 0.5,
-        }
-
-
-@F.pandas_udf(CLS_RESULT_TYPE)
-def classify_udf(correcteds: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([_cls_row(t) for t in correcteds])
-
-
-_EMPTY_ENTITIES = {
-    "medications": [],
-    "conditions": [],
-    "procedures": [],
-    "measurements": [],
-}
-
-
-@F.pandas_udf(ENTITIES_TYPE)
-def entities_udf(correcteds: pd.Series) -> pd.DataFrame:
-    """C4 basic entity regex scan over the corrected text."""
-    from ..functions.classify import extract_medical_entities
-
-    def one(corrected):
-        try:
-            return extract_medical_entities(
-                corrected if isinstance(corrected, str) else ""
+        Iterator form so per-worker init (dictionary lookups, regex
+        compiles — the lazy-singleton pattern of ``app/api.py:56-104``)
+        happens once per Python worker process, not per batch.
+        """
+        for series in texts:
+            yield pd.DataFrame(
+                [extract_turn(t if isinstance(t, str) else None, stages) for t in series]
             )
-        except Exception:
-            return dict(_EMPTY_ENTITIES)
 
-    return pd.DataFrame([one(t) for t in correcteds])
+    def flagship_row_udf(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        """text → exactly the six fields the flagship surface projects, in
+        ONE Arrow crossing (round 7, guide §4.1): the full-struct split path
+        paid four ArrowEvalPython nodes and re-shipped content/corrected_text
+        into the stage UDFs, tripling extract_full_docs' wall time."""
+        for series in texts:
+            rows = []
+            for t in series:
+                r = extract_turn(t if isinstance(t, str) else None, stages)
+                rows.append(
+                    {
+                        "document_type": r["document_type"],
+                        "urgency": r["urgency"],
+                        "matched_drugs": r["matched_drugs"],
+                        "matched_diseases": r["matched_diseases"],
+                        "corrected_text": r["corrected_text"],
+                        "n_segments": r["metrics"]["n_segments"],
+                    }
+                )
+            yield pd.DataFrame(rows)
+
+    udfs["extract_turn_udf"] = F.pandas_udf(EXTRACTION_RESULT_TYPE)(extract_turn_udf)
+    udfs["flagship_row_udf"] = F.pandas_udf(FLAGSHIP_ROW_TYPE)(flagship_row_udf)
+    return udfs
+
+
+_udfs = extraction_udfs(STAGES)
+extract_turn_udf = _udfs["extract_turn_udf"]
+flagship_row_udf = _udfs["flagship_row_udf"]
+extract_core_udf = _udfs["extract_core_udf"]
+segments_udf = _udfs["segments_udf"]
+fields_udf = _udfs["fields_udf"]
+classify_udf = _udfs["classify_udf"]
+entities_udf = _udfs["entities_udf"]
+# text → (masked_text, PII spans) — north_star de-identification stage,
+# also applied on its own (``htep_deid``, ``q_deid_spans``, ``q_deid_mask``)
+deid_udf = _udfs["deid_udf"]
+
+_KEYS = ("conv_id", "turn_idx", "role", "ts")
 
 
 def extract_transcripts(df: DataFrame) -> DataFrame:
@@ -350,139 +186,34 @@ def extract_transcripts(df: DataFrame) -> DataFrame:
     # stage UDFs no consumer reads (an expensive expression referenced
     # several times — e.g. a UDF inside the struct — would block the
     # collapse and defeat the pruning).
-    core = F.col("_core")
-    base = df.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "ts",
-        extract_core_udf(F.col("text")).alias("_core"),
-    )
-    stage2 = base.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "ts",
-        "_core",
-        segments_udf(core.getField("content")).alias("_segments"),
-        fields_udf(core.getField("final_text")).alias("_extracted"),
-        classify_udf(core.getField("corrected_text")).alias("_cls"),
-        entities_udf(core.getField("corrected_text")).alias("_entities"),
-        deid_udf(core.getField("final_text")).alias("_deid"),
-    )
-    cls = F.col("_cls")
-    result = F.struct(
-        core.getField("payload_kind").alias("payload_kind"),
-        core.getField("content").alias("content"),
-        core.getField("final_text").alias("final_text"),
-        core.getField("corrected_text").alias("corrected_text"),
-        core.getField("corrections").alias("corrections"),
-        core.getField("matched_drugs").alias("matched_drugs"),
-        core.getField("matched_diseases").alias("matched_diseases"),
-        F.col("_segments").getField("segments").alias("segments"),
-        F.col("_extracted").alias("extracted"),
-        cls.getField("document_type").alias("document_type"),
-        cls.getField("doc_confidence").alias("doc_confidence"),
-        cls.getField("keywords_found").alias("keywords_found"),
-        cls.getField("secondary_types").alias("secondary_types"),
-        cls.getField("urgency").alias("urgency"),
-        cls.getField("urgency_confidence").alias("urgency_confidence"),
-        F.col("_entities").alias("entities"),
-        F.col("_deid").alias("deid"),
-        F.struct(
-            core.getField("blocks_kept").alias("blocks_kept"),
-            core.getField("blocks_dropped").alias("blocks_dropped"),
-            F.col("_segments").getField("n_segments").alias("n_segments"),
-            core.getField("n_corrections").alias("n_corrections"),
-            core.getField("content_chars").alias("content_chars"),
-            core.getField("failed").alias("failed"),
-            core.getField("error").alias("error"),
-        ).alias("metrics"),
-    )
-    return stage2.select("conv_id", "turn_idx", "role", "ts", result.alias("result"))
+    column = {"text": F.col("text")}  # result field → column holding it
+    for stage in STAGES:
+        out = F.col(f"_{stage.name}")
+        for path in stage.fields:
+            name = path.rsplit(".", 1)[-1]
+            column[name] = out if len(stage.fields) == 1 else out.getField(name)
 
+    # looked up when called: this surface runs the UDFs the module binds
+    # now, as the whole-turn surfaces do (a test rebinds them all at once)
+    def apply(stage: Stage):
+        udf = globals()[_udf_name(stage)]
+        return udf(column[stage.reads]).alias(f"_{stage.name}")
 
-FLAGSHIP_ROW_TYPE = StructType(
-    [
-        StructField("document_type", StringType(), True),
-        StructField("urgency", StringType(), True),
-        StructField("matched_drugs", ArrayType(StringType()), True),
-        StructField("matched_diseases", ArrayType(StringType()), True),
-        StructField("corrected_text", StringType(), True),
-        StructField("n_segments", IntegerType(), True),
-    ]
-)
+    # the core stage reads the raw text; every other stage reads a core
+    # field, so two projections (two ArrowEvalPython nodes) run them all
+    core, *rest = STAGES
+    base = df.select(*_KEYS, apply(core))
+    stage2 = base.select(*_KEYS, f"_{core.name}", *[apply(s) for s in rest])
 
-
-@F.pandas_udf(FLAGSHIP_ROW_TYPE)
-def flagship_row_udf(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """text → exactly the six fields the flagship surface projects, in ONE
-    Arrow crossing (round 7, guide §4.1): the full-struct split path paid
-    four ArrowEvalPython nodes and re-shipped content/corrected_text into
-    the stage UDFs, tripling extract_full_docs' wall time. Calls the
-    monolithic ``extract_turn`` so whole-turn stage-isolation semantics
-    (and therefore the rows-only canonical hash) are identical by
-    construction."""
-    for series in texts:
-        rows = []
-        for t in series:
-            r = extract_turn(t if isinstance(t, str) else None)
-            rows.append(
-                {
-                    "document_type": r["document_type"],
-                    "urgency": r["urgency"],
-                    "matched_drugs": r["matched_drugs"],
-                    "matched_diseases": r["matched_diseases"],
-                    "corrected_text": r["corrected_text"],
-                    "n_segments": r["metrics"]["n_segments"],
-                }
-            )
-        yield pd.DataFrame(rows)
-
-
-@F.pandas_udf(StringType())
-def corrected_text_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Narrow variant: text → corrected main-content text only (cheaper
-    output schema when downstream needs just the text column)."""
-    for series in texts:
-        yield pd.Series(
-            [
-                extract_turn(t if isinstance(t, str) else None)["corrected_text"]
-                for t in series
+    def struct(dtype: StructType):
+        return F.struct(
+            *[
+                # a field no stage fills (metrics) is built from its leaves
+                (column[f.name] if f.name in column else struct(f.dataType)).alias(
+                    f.name
+                )
+                for f in dtype.fields
             ]
         )
 
-
-DEID_RESULT_TYPE = StructType(
-    [
-        StructField("masked_text", StringType(), True),
-        StructField(
-            "spans",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("start_char", IntegerType(), True),
-                        StructField("end_char", IntegerType(), True),
-                        StructField("kind", StringType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)
-
-
-@F.pandas_udf(DEID_RESULT_TYPE)
-def deid_udf(texts: pd.Series) -> pd.DataFrame:
-    """text → (masked_text, PII spans) — north_star de-identification stage."""
-    from ..functions.deid import deidentify
-
-    def one(t):
-        t = t if isinstance(t, str) else ""
-        try:
-            return deidentify(t)
-        except Exception:
-            return {"masked_text": t, "spans": []}
-
-    return pd.DataFrame([one(t) for t in texts])
+    return stage2.select(*_KEYS, struct(EXTRACTION_RESULT_TYPE).alias("result"))

@@ -19,16 +19,24 @@ line-anchored field regex. Segments come from the CLI DAG
 ``content`` with char spans. These composition choices are this engine's
 canonical semantics; every per-operator behavior is reference-faithful.
 
-This exact function body is both the pytest oracle and the kernel of the
-Spark pandas UDF (``htep_spark/operators/extract.py``) — equality by
-construction, then tested anyway. Stage-isolation semantics
-(``app/api.py:215-293``): any stage failure degrades that stage's output
-and sets ``metrics.failed`` — a turn is never lost.
+The chain is one ordered table, ``STAGES``: each stage names the upstream
+field it reads, its function, its default output on failure and the
+result-struct fields it fills. ``extract_turn`` is a fold over the table,
+and the Spark stage UDFs (``htep_spark/operators/extract.py``) are
+generated from the same table — equality by construction, then tested
+anyway.
+
+Stage isolation (``app/api.py:215-293``), one rule on every surface: each
+stage catches its own exception and fills its fields with its default;
+downstream stages read whatever their upstream returned, fallback or not.
+A turn is never lost. ``metrics.failed``/``metrics.error`` report the core
+stage (payload decode + correction) only, so a consumer of the metrics
+never depends on the other stages.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Tuple
+from typing import Callable, Dict, NamedTuple, Optional, Tuple
 
 from .dictionaries import (
     DISEASES_MULTI,
@@ -55,7 +63,7 @@ from .functions.pdf_layout import looks_like_pdf_layout, parse_pdf_layout
 from .functions.segments import segment_document
 from .functions.textops import fusion_correct, postprocess
 
-__all__ = ["decode_payload", "extract_turn", "fusion_correct"]
+__all__ = ["STAGES", "Stage", "decode_payload", "extract_turn", "fusion_correct"]
 
 # Per-process fuzzy-lookup memo tables (pure caches: same in → same out).
 _DRUG_MEMO: Dict = {}
@@ -90,46 +98,93 @@ def decode_payload(text: Optional[str]) -> Tuple[str, str, int, int]:
     return text, "plain", 0, 0
 
 
-def extract_turn(text: Optional[str]) -> Dict:
-    """Full canonical per-turn extraction. Returns the dict form of
-    ``schema.EXTRACTION_RESULT_TYPE``."""
+class Stage(NamedTuple):
+    """One link of the chain. ``fn(value)`` returns a dict keyed by the
+    leaf names of ``fields`` (paths into ``schema.EXTRACTION_RESULT_TYPE``);
+    if it raises, ``default(value, error)`` returns that dict instead.
+    ``value`` is the field ``reads`` names (``"text"`` is the raw input)."""
+
+    name: str
+    reads: str
+    fn: Callable[[Optional[str]], Dict]
+    default: Callable[[Optional[str], str], Dict]
+    fields: Tuple[str, ...]
+
+
+def run_stage(stage: Stage, value: Optional[str]) -> Dict:
+    """``stage.fn(value)``, or its default if it raises — the one isolation
+    rule of every surface."""
     try:
-        return _extract_turn_inner(text)
+        return stage.fn(value)
     except Exception as exc:  # stage isolation: never lose a turn
-        safe = text or ""
-        return {
-            "payload_kind": "plain",
-            "content": safe,
-            "final_text": safe.strip(),
-            "corrected_text": safe.strip(),
-            "corrections": [],
-            "matched_drugs": [],
-            "matched_diseases": [],
-            "segments": [],
-            "extracted": _empty_extracted(),
-            "document_type": "unknown",
-            "doc_confidence": 0.0,
-            "keywords_found": [],
-            "secondary_types": [],
-            "urgency": "routine",
-            "urgency_confidence": 0.5,
-            "entities": {
-                "medications": [],
-                "conditions": [],
-                "procedures": [],
-                "measurements": [],
-            },
-            "deid": {"masked_text": safe.strip(), "spans": []},
-            "metrics": {
-                "blocks_kept": 0,
-                "blocks_dropped": 0,
-                "n_segments": 0,
-                "n_corrections": 0,
-                "content_chars": len(safe),
-                "failed": True,
-                "error": f"{type(exc).__name__}: {exc}",
-            },
-        }
+        return stage.default(value, f"{type(exc).__name__}: {exc}")
+
+
+def _core(text: Optional[str]) -> Dict:
+    """Payload decode (S1-S3 routing) + T7 dictionary post-processing."""
+    content, payload_kind, kept, dropped = decode_payload(text)
+    # app/api.py:233 — the canonical text is the decoded content, stripped.
+    final_text = content.strip()
+    post = postprocess(
+        final_text,
+        DRUGS_SINGLE,
+        DRUGS_MULTI,
+        DRUG_SET,
+        DISEASES_SINGLE,
+        DISEASES_MULTI,
+        DISEASE_SET,
+        85.0,
+        _DRUG_MEMO,
+        _DISEASE_MEMO,
+    )
+    return {
+        "payload_kind": payload_kind,
+        "content": content,
+        "final_text": final_text,
+        "corrected_text": post["corrected_text"] if final_text else "",
+        "corrections": [
+            {
+                "from": c["from"],
+                "to": c["to"],
+                "type": c["type"],
+                "score": int(c["score"]),
+            }
+            for c in post["corrections"]
+        ],
+        "matched_drugs": post["matched_drugs"],
+        "matched_diseases": post["matched_diseases"],
+        "blocks_kept": kept,
+        "blocks_dropped": dropped,
+        "n_corrections": len(post["corrections"]),
+        "content_chars": len(content),
+        "failed": False,
+        "error": None,
+    }
+
+
+def _core_default(text: Optional[str], error: str) -> Dict:
+    safe = text or ""
+    return {
+        "payload_kind": "plain",
+        "content": safe,
+        "final_text": safe.strip(),
+        "corrected_text": safe.strip(),
+        "corrections": [],
+        "matched_drugs": [],
+        "matched_diseases": [],
+        "blocks_kept": 0,
+        "blocks_dropped": 0,
+        "n_corrections": 0,
+        "content_chars": len(safe),
+        "failed": True,
+        "error": error,
+    }
+
+
+def _segments(content: str) -> Dict:
+    # segments on multi-line content (documented deviation, module docstring)
+    segments = segment_document(content)
+    return {"segments": segments, "n_segments": len(segments)}
 
 
 def _empty_extracted() -> Dict:
@@ -147,81 +202,139 @@ def _empty_extracted() -> Dict:
     }
 
 
-def _extract_turn_inner(text: Optional[str]) -> Dict:
-    content, payload_kind, kept, dropped = decode_payload(text)
-
-    # app/api.py:233 — the canonical text is the decoded content, stripped.
-    final_text = content.strip()
-
-    post = postprocess(
-        final_text,
-        DRUGS_SINGLE,
-        DRUGS_MULTI,
-        DRUG_SET,
-        DISEASES_SINGLE,
-        DISEASES_MULTI,
-        DISEASE_SET,
-        85.0,
-        _DRUG_MEMO,
-        _DISEASE_MEMO,
-    )
-    corrected_text = post["corrected_text"] if final_text else ""
-
-    # segments on multi-line content (documented deviation, module docstring)
-    segments = segment_document(content)
-
+def _fields(final_text: str) -> Dict:
     # eval-harness DAG: field extraction on the newline-intact final text
     extracted = extract_record(final_text) if final_text else {}
-    if extracted:
-        vit = extracted.get("vitals") or {}
-        extracted["vitals"] = {
-            "bp": vit.get("bp"),
-            "temp": vit.get("temp"),
-            "pulse": vit.get("pulse"),
-        }
-    else:
-        extracted = _empty_extracted()
+    if not extracted:
+        return {"extracted": _empty_extracted()}
+    vit = extracted.get("vitals") or {}
+    extracted["vitals"] = {
+        "bp": vit.get("bp"),
+        "temp": vit.get("temp"),
+        "pulse": vit.get("pulse"),
+    }
+    return {"extracted": extracted}
 
+
+def _classify(corrected_text: str) -> Dict:
+    """C1 classification + C2 urgency, in the reference chain order."""
     cls = classify_document(corrected_text)
     urgency, urgency_conf = document_urgency(corrected_text)
-    entities = extract_medical_entities(corrected_text)
-    # north_star de-identification: masked text + PII spans against the
-    # newline-intact final text (same reference frame as the extractor)
-    deid = deidentify(final_text)
-
     return {
-        "payload_kind": payload_kind,
-        "content": content,
-        "final_text": final_text,
-        "corrected_text": corrected_text,
-        "corrections": [
-            {
-                "from": c["from"],
-                "to": c["to"],
-                "type": c["type"],
-                "score": int(c["score"]),
-            }
-            for c in post["corrections"]
-        ],
-        "matched_drugs": post["matched_drugs"],
-        "matched_diseases": post["matched_diseases"],
-        "segments": segments,
-        "extracted": extracted,
         "document_type": cls["document_type"],
         "doc_confidence": float(cls["confidence"]),
         "keywords_found": cls["keywords_found"],
         "secondary_types": cls["secondary_types"],
         "urgency": urgency,
         "urgency_confidence": float(urgency_conf),
-        "entities": entities,
-        "deid": deid,
-        "metrics": {
-            "blocks_kept": kept,
-            "blocks_dropped": dropped,
-            "n_segments": len(segments),
-            "n_corrections": len(post["corrections"]),
-            "content_chars": len(content),
-            "failed": False,
-            "error": None,
-        },
     }
+
+
+def _entities(corrected_text: str) -> Dict:
+    return {"entities": extract_medical_entities(corrected_text)}
+
+
+def _deid(final_text: str) -> Dict:
+    # north_star de-identification: masked text + PII spans against the
+    # newline-intact final text (same reference frame as the extractor)
+    return {"deid": deidentify(final_text)}
+
+
+STAGES: Tuple[Stage, ...] = (
+    Stage(
+        "core",
+        "text",
+        _core,
+        _core_default,
+        (
+            "payload_kind",
+            "content",
+            "final_text",
+            "corrected_text",
+            "corrections",
+            "matched_drugs",
+            "matched_diseases",
+            "metrics.blocks_kept",
+            "metrics.blocks_dropped",
+            "metrics.n_corrections",
+            "metrics.content_chars",
+            "metrics.failed",
+            "metrics.error",
+        ),
+    ),
+    Stage(
+        "segments",
+        "content",
+        _segments,
+        lambda content, error: {"segments": [], "n_segments": 0},
+        ("segments", "metrics.n_segments"),
+    ),
+    Stage(
+        "fields",
+        "final_text",
+        _fields,
+        lambda final_text, error: {"extracted": _empty_extracted()},
+        ("extracted",),
+    ),
+    Stage(
+        "classify",
+        "corrected_text",
+        _classify,
+        lambda corrected_text, error: {
+            "document_type": "unknown",
+            "doc_confidence": 0.0,
+            "keywords_found": [],
+            "secondary_types": [],
+            "urgency": "routine",
+            "urgency_confidence": 0.5,
+        },
+        (
+            "document_type",
+            "doc_confidence",
+            "keywords_found",
+            "secondary_types",
+            "urgency",
+            "urgency_confidence",
+        ),
+    ),
+    Stage(
+        "entities",
+        "corrected_text",
+        _entities,
+        lambda corrected_text, error: {
+            "entities": {
+                "medications": [],
+                "conditions": [],
+                "procedures": [],
+                "measurements": [],
+            }
+        },
+        ("entities",),
+    ),
+    Stage(
+        "deid",
+        "final_text",
+        _deid,
+        lambda final_text, error: {
+            "deid": {"masked_text": final_text, "spans": []}
+        },
+        ("deid",),
+    ),
+)
+
+
+def extract_turn(text: Optional[str], stages: Tuple[Stage, ...] = STAGES) -> Dict:
+    """Full canonical per-turn extraction: a fold over ``stages``. Returns
+    the dict form of ``schema.EXTRACTION_RESULT_TYPE``."""
+    scope: Dict = {"text": text}
+    result: Dict = {}
+    for stage in stages:
+        out = run_stage(stage, scope[stage.reads])
+        scope.update(out)
+        for path in stage.fields:
+            *parents, name = path.split(".")
+            dest = result
+            for parent in parents:
+                dest = dest.setdefault(parent, {})
+            dest[name] = out[name]
+    return result

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from htep_spark.plans.checkpoint import run_with_checkpoint
 from htep_spark.plans.pipeline import per_conversation_metrics, run_extraction, validate_turn_order
-from htep_spark.reference import extract_turn
+from htep_spark.reference import STAGES, extract_turn
 from htep_spark.schema import TRANSCRIPT_SCHEMA
 from htep_spark.sources.io import synthesize_transcripts, synthesize_transcripts_pdf
 
@@ -290,3 +290,103 @@ def test_checkpoint_crash_between_data_and_manifest(spark, transcripts_pdf, tmp_
         spark.read.parquet(manifest_dir).filter("status='done'").count()
         == first["processed"]
     )
+
+
+# One turn of each payload route, plus the empty and null edge cases.
+_FAULT_TEXTS = [
+    "Patient has diabete5 and takes asp1rin daily\nBP: 120/80",
+    "<html><body><nav>Home | Contact</nav><main><p>Discharge summary."
+    " Diagnosis: hypertension. Rx: amlodipine 5mg once daily.</p></main>"
+    "</body></html>",
+    "```\nPrescription: metformin 500mg twice daily for diabetes\n```",
+    "",
+    None,
+]
+
+
+def _raising(stage_name):
+    # a nested function is pickled by value, so it reaches the Python
+    # workers inside the UDF closures without being importable there
+    def boom(value):
+        raise RuntimeError(f"injected {stage_name} fault")
+
+    return boom
+
+
+def _at(result, path):
+    for name in path.split("."):
+        result = result[name]
+    return result
+
+
+@pytest.mark.parametrize("stage_name", [s.name for s in STAGES])
+def test_stage_fault_isolation_agrees_across_surfaces(
+    spark, tmp_path, monkeypatch, stage_name
+):
+    """One stage raises on every turn. The batch split (``run_extraction``),
+    the flagship row UDF, streaming and the SQL-registered ``htep_extract``
+    must all give the rows of the in-process fold, in which only the
+    raising stage fell back to its default: ``metrics.failed`` is set by a
+    core fault alone, and every other stage's fields are untouched by a
+    downstream fault. The raising stage reaches the workers through
+    ``extraction_udfs``, the factory of the production UDFs."""
+    from htep_spark.functions.register import register_all
+    from htep_spark.operators import extract
+    from htep_spark.streaming import stream
+
+    stages = tuple(
+        s._replace(fn=_raising(s.name)) if s.name == stage_name else s
+        for s in STAGES
+    )
+    expected = {f"c{i}": extract_turn(t, stages) for i, t in enumerate(_FAULT_TEXTS)}
+    for cid, text in zip(expected, _FAULT_TEXTS):
+        got, clean = expected[cid], extract_turn(text)
+        assert got["metrics"]["failed"] is (stage_name == "core")
+        if stage_name == "core":
+            assert got["metrics"]["error"] == "RuntimeError: injected core fault"
+            continue
+        for s in STAGES:
+            if s.name != stage_name:
+                for path in s.fields:
+                    assert _at(got, path) == _at(clean, path), (cid, path)
+
+    for name, udf in extract.extraction_udfs(stages).items():
+        monkeypatch.setattr(extract, name, udf)
+    monkeypatch.setattr(stream, "extract_turn_udf", extract.extract_turn_udf)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(cid, 0, "user", t, "", None) for cid, t in zip(expected, _FAULT_TEXTS)],
+        TRANSCRIPT_SCHEMA,
+    ).write.parquet(src)
+    turns = spark.read.parquet(src)
+    try:
+        register_all(spark)
+        turns.createOrReplaceTempView("fault_turns")
+        sql = spark.sql("SELECT conv_id, htep_extract(text) AS result FROM fault_turns")
+        query = (
+            stream.stream_extraction(spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src))
+            .writeStream.format("memory")
+            .queryName(f"fault_{stage_name}")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination(120)
+        streamed = spark.table(f"fault_{stage_name}")
+        for surface in (run_extraction(turns), sql, streamed):
+            got = {r["conv_id"]: _normalize(r["result"]) for r in surface.collect()}
+            assert got == expected
+        flagship = turns.select("conv_id", extract.flagship_row_udf(F.col("text")).alias("r"))
+        for r in flagship.collect():
+            exp = expected[r["conv_id"]]
+            assert _normalize(r["r"]) == {
+                "document_type": exp["document_type"],
+                "urgency": exp["urgency"],
+                "matched_drugs": exp["matched_drugs"],
+                "matched_diseases": exp["matched_diseases"],
+                "corrected_text": exp["corrected_text"],
+                "n_segments": exp["metrics"]["n_segments"],
+            }
+    finally:
+        monkeypatch.undo()
+        register_all(spark)
