@@ -381,14 +381,6 @@ FROM scored
 # C1 — document-type classification (src/nlp/classifier.py:130-200)
 # --------------------------------------------------------------------------
 
-def _type_score_col(low, text_col, doc_type: str):
-    data = DOCUMENT_PATTERNS[doc_type]
-    score = _hits_col(low, data["keywords"])
-    for p in data["patterns"]:
-        score = score + F.regexp_count(text_col, F.lit(f"(?i){p}")) * 2
-    return score
-
-
 def _type_score_sql(text_expr: str, doc_type: str) -> str:
     data = DOCUMENT_PATTERNS[doc_type]
     kw = _hits_sql(text_expr, data["keywords"])
@@ -15338,7 +15330,7 @@ FROM stats s CROSS JOIN piv p
 # 1-in-11 slice exercises the NULL-on-parse-failure contract both
 # engines share), and a per-key rollup with distinct-user counts.
 # Completes the source-format story: parquet (everything), text
-# (corpus), binary (multimodal), JSON (this).
+# (corpus), JSON (this).
 #
 # Scale shape: one scan; JSON parsing is per-row JVM-side (no Python);
 # the rollup is map-side combinable; output is |keys|-sized.
@@ -17752,27 +17744,21 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both exact-rank medians (identical (slope, ti, tj) / (r, t)
     # orderings, rank (n+1) div 2) then run on the driver — replacing 4
     # localCheckpoints and ~10 shuffle/rank jobs per call.
+    # Keys are epoch hours (long), not collected timestamps: under a DST
+    # session/driver zone the two physical hours of a fall-back collect
+    # to the same naive datetime and would merge into one grid slot.
     cnt = {
         r["h"]: r["c"]
         for r in ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("h")
+            F.expr("unix_timestamp(date_trunc('hour', ts)) div 3600").alias("h")
         )
         .agg(F.count("*").alias("c"))
         .collect()
     }
-    import datetime as _dt
-
-    hours = sorted(cnt)
     rows = []
-    if hours:
-        h0, h1 = hours[0], hours[-1]
-        grid = []
-        h = h0
-        while h <= h1:
-            grid.append(h)
-            h = h + _dt.timedelta(hours=1)
-        xs = [cnt.get(h, 0) for h in grid]
-        ts = list(range(1, len(grid) + 1))
+    if cnt:
+        xs = [cnt.get(h, 0) for h in range(min(cnt), max(cnt) + 1)]
+        ts = list(range(1, len(xs) + 1))
         for scope in ("same", "trended"):
             if scope == "trended":
                 ys = [x + (t * MK_RATE) // MK_GRID for x, t in zip(xs, ts)]

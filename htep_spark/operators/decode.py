@@ -336,24 +336,6 @@ def q_paragraph_decode(spark, sf_dir: str):
     )
 
 
-def q_beam_decode(spark, sf_dir: str):
-    """Rows-only driver query: deterministic synthetic candidate matrices
-    from document tokens (confidence = stable per-char hash), decoded
-    against the drug lexicon with diseases as broad lexicon."""
-    from ..dictionaries import DISEASES_SINGLE, DRUGS_SINGLE
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.slice(
-        F.regexp_extract_all(F.upper(F.col("text")), F.lit("[A-Z]+"), 0), 1, 5
-    )
-    words = docs.select("doc_id", F.posexplode(toks).alias("word_idx", "word"))
-    cands = _word_candidates_col(F.col("word"))
-    decode = make_beam_decode_udf(DRUGS_SINGLE + DISEASES_SINGLE, DRUGS_SINGLE)
-    return words.select(
-        "doc_id", "word_idx", decode(cands).alias("decoded")
-    ).select("doc_id", "word_idx", "decoded.*")
-
-
 def q_parse(spark, sf_dir: str):
     """Rows-only driver query: block-parser correction over documents."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(

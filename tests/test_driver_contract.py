@@ -213,3 +213,40 @@ def test_beam_replace_branches_nonvacuous():
         f"SELECT count(*) FROM ({q}) WHERE replacement_applied = 1"
     ).fetchone()[0]
     assert applied > 0
+
+
+def test_theil_sen_grid_counts_dst_fall_back_hour_once(spark, tmp_path):
+    """`theil_sen` builds its hourly grid from epoch hours: with the
+    driver and session zones on America/New_York, the two physical 01:00
+    hours of the 2026-11-01 fall-back stay two grid slots, so the pair
+    count is n*(n-1)/2 for the n physical hours spanned."""
+    import datetime as dt
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    from htep_spark.driver_queries import q_theil_sen
+
+    t0 = int(dt.datetime(2026, 11, 1, 2, tzinfo=dt.timezone.utc).timestamp())
+    spark.range(18).select(  # one event per 20 min, 02:00Z-07:40Z
+        (F.lit(t0) + F.col("id") * 1200).cast("timestamp").alias("ts")
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    n = 6  # physical hours 02Z-07Z; local 01:00 occurs twice
+
+    key = "spark.sql.session.timeZone"
+    old_conf, old_tz = spark.conf.get(key), os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    spark.conf.set(key, "America/New_York")
+    try:
+        rows = q_theil_sen(spark, str(tmp_path)).collect()
+    finally:
+        spark.conf.set(key, old_conf)
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert sorted(r["scope"] for r in rows) == ["same", "trended"]
+    assert all(r["n_pairs"] == n * (n - 1) // 2 for r in rows), rows
