@@ -9,13 +9,19 @@ swap, see ``sources/io.py``).
 
 Protocol (write-ordering gives idempotent exactly-once resume):
   1. list input files → stable ``partition_id`` per file
-  2. anti-join against manifest rows with ``status = 'done'`` → pending
+  2. read the manifest's ``partition_id``/``status`` with pyarrow → pending
   3. per pending unit: extract → write data to its own output subdir
-     (overwrite — a re-run of a crashed unit is idempotent) → only then
-     append the manifest row with metrics
-A crash between data write and manifest append re-runs that unit; the
-overwrite makes it harmless. The manifest doubles as the run's lineage +
-metrics table (blocks kept/dropped, span counts, failures per unit).
+     (overwrite — a re-run of a crashed unit is idempotent) → only then the
+     driver appends the manifest row: one-row parquet to a dot-prefixed temp
+     file, ``os.replace``d to ``part-<partition_id>-<uuid4>.parquet``
+A crash between data write and rename re-runs that unit; the overwrite
+makes it harmless, and Spark and step 2 both skip a leftover temp file.
+Steps 2 and 3's append move a few bytes, too few to pay for Spark jobs
+(schema inference, a collect, a commit protocol): a unit runs only its
+input schema read and its observed write. Manifest paths must be POSIX
+paths the driver can open, as ``plan_units`` already requires. The manifest
+stays one parquet table (``MANIFEST_SCHEMA``) and doubles as the run's
+lineage + metrics table (blocks kept/dropped, span counts, failures).
 """
 
 from __future__ import annotations
@@ -23,57 +29,68 @@ from __future__ import annotations
 import hashlib
 import os
 import time
-from typing import Dict, List, Optional
+import uuid
+from typing import Dict, List
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import run_extraction
 
-__all__ = ["plan_units", "pending_units", "run_with_checkpoint", "read_manifest"]
+__all__ = ["plan_units", "pending_units", "run_with_checkpoint"]
 
-MANIFEST_COLUMNS = [
-    "run_id", "partition_id", "input_file", "status", "n_turns", "n_failed",
-    "n_segments", "blocks_kept", "blocks_dropped", "wall_sec", "finished_at",
-]
+MANIFEST_SCHEMA = pa.schema([
+    ("run_id", pa.string()),
+    ("partition_id", pa.string()),
+    ("input_file", pa.string()),
+    ("status", pa.string()),
+    ("n_turns", pa.int64()),
+    ("n_failed", pa.int64()),
+    ("n_segments", pa.int64()),
+    ("blocks_kept", pa.int64()),
+    ("blocks_dropped", pa.int64()),
+    ("wall_sec", pa.float64()),
+    ("finished_at", pa.string()),
+])
+MANIFEST_COLUMNS = MANIFEST_SCHEMA.names
 
 
 def _partition_id(input_file: str) -> str:
     return hashlib.sha1(os.path.basename(input_file).encode()).hexdigest()[:16]
 
 
+def _visible(names: List[str]) -> List[str]:
+    # the names Spark's file listing keeps: no _SUCCESS, .crc or temp files
+    return sorted(n for n in names if not n.startswith((".", "_")))
+
+
 def plan_units(input_path: str) -> List[Dict[str, str]]:
-    """Input files of a parquet dataset → work units (deterministic order)."""
+    """Top-level ``*.parquet`` files → work units (deterministic order);
+    a hive-partitioned ``key=value/`` dir raises rather than plan none."""
     if os.path.isfile(input_path):
         files = [input_path]
     else:
-        files = sorted(
-            os.path.join(input_path, f)
-            for f in os.listdir(input_path)
-            if f.endswith(".parquet")
-        )
+        names = _visible(os.listdir(input_path))
+        files = [os.path.join(input_path, f) for f in names if f.endswith(".parquet")]
+        if not files and any(os.path.isdir(os.path.join(input_path, f)) for f in names):
+            raise ValueError(f"{input_path}: no top-level parquet file, only subdirs; "
+                             "a hive-partitioned (key=value/) layout is not supported")
     return [{"partition_id": _partition_id(f), "input_file": f} for f in files]
 
 
-def read_manifest(spark: SparkSession, manifest_dir: str) -> Optional[DataFrame]:
-    try:
-        return spark.read.parquet(manifest_dir)
-    except Exception:
-        return None
-
-
 def pending_units(spark: SparkSession, input_path: str, manifest_dir: str) -> List[Dict]:
+    """Units without a ``done`` manifest row; runs no Spark job."""
     units = plan_units(input_path)
-    manifest = read_manifest(spark, manifest_dir)
-    if manifest is None:
+    try:
+        names = _visible(os.listdir(manifest_dir))
+    except FileNotFoundError:
         return units
-    done = {
-        r["partition_id"]
-        for r in manifest.filter(F.col("status") == "done")
-        .select("partition_id")
-        .distinct()
-        .collect()
-    }
+    done = set()
+    for name in names:
+        rows = pq.read_table(os.path.join(manifest_dir, name), columns=["partition_id", "status"])
+        done.update(r["partition_id"] for r in rows.to_pylist() if r["status"] == "done")
     return [u for u in units if u["partition_id"] not in done]
 
 
@@ -87,9 +104,8 @@ def run_with_checkpoint(
     """Process all pending units; returns ``{processed, skipped}``."""
     all_units = plan_units(input_path)
     todo = pending_units(spark, input_path, manifest_dir)
-    processed = 0
     for unit in todo:
-        t0 = time.time()
+        t0 = time.perf_counter()
         df = spark.read.parquet(unit["input_file"])
         extracted = run_extraction(df)
         out_path = os.path.join(output_dir, f"part-{unit['partition_id']}")
@@ -105,24 +121,13 @@ def run_with_checkpoint(
             F.sum("result.metrics.blocks_kept").alias("blocks_kept"),
             F.sum("result.metrics.blocks_dropped").alias("blocks_dropped"),
         ).write.mode("overwrite").parquet(out_path)
-        stats = obs.get
-        row = [
-            (
-                run_id,
-                unit["partition_id"],
-                unit["input_file"],
-                "done",
-                int(stats["n_turns"] or 0),
-                int(stats["n_failed"] or 0),
-                int(stats["n_segments"] or 0),
-                int(stats["blocks_kept"] or 0),
-                int(stats["blocks_dropped"] or 0),
-                float(round(time.time() - t0, 3)),
-                time.strftime("%Y-%m-%dT%H:%M:%S"),
-            )
-        ]
-        spark.createDataFrame(row, MANIFEST_COLUMNS).write.mode("append").parquet(
-            manifest_dir
-        )
-        processed += 1
-    return {"processed": processed, "skipped": len(all_units) - len(todo)}
+        stats = {k: int(v or 0) for k, v in obs.get.items()}
+        row = {"run_id": run_id, **unit, "status": "done", **stats,
+               "wall_sec": round(time.perf_counter() - t0, 3),
+               "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())}
+        name = f"part-{unit['partition_id']}-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(manifest_dir, f".{name}.tmp")
+        os.makedirs(manifest_dir, exist_ok=True)
+        pq.write_table(pa.Table.from_pylist([row], schema=MANIFEST_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(manifest_dir, name))  # the commit point
+    return {"processed": len(todo), "skipped": len(all_units) - len(todo)}

@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import math
 import os
+import re
+import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -260,8 +263,6 @@ def test_sql_function_registration(spark, transcripts):
 def test_checkpoint_crash_between_data_and_manifest(spark, transcripts_pdf, tmp_path):
     """Crash simulation: a unit whose output was written but whose manifest
     row never committed must be re-processed idempotently on resume."""
-    import shutil
-
     from htep_spark.plans.checkpoint import plan_units, run_with_checkpoint
 
     input_dir = str(tmp_path / "cin")
@@ -290,6 +291,113 @@ def test_checkpoint_crash_between_data_and_manifest(spark, transcripts_pdf, tmp_
         spark.read.parquet(manifest_dir).filter("status='done'").count()
         == first["processed"]
     )
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under its own job group; return (result, jobs launched)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _split_input(spark, transcripts_pdf, tmp_path):
+    """Two input files: the first in ``in``, the path of the second held back."""
+    staged, input_dir = str(tmp_path / "staged"), str(tmp_path / "in")
+    spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA).repartition(
+        2
+    ).write.parquet(staged)
+    files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    os.makedirs(input_dir)
+    shutil.copy(os.path.join(staged, files[0]), input_dir)
+    return input_dir, os.path.join(staged, files[1])
+
+
+def test_checkpoint_bookkeeping_launches_no_spark_job(spark, transcripts_pdf, tmp_path):
+    """Manifest reads and appends run on the driver: a unit launches only
+    its own jobs (input schema read, observed write), and a resume with
+    nothing pending launches none."""
+    input_dir, later = _split_input(spark, transcripts_pdf, tmp_path)
+    out_dir, manifest_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    run_with_checkpoint(spark, input_dir, out_dir, manifest_dir, "run-a")
+    stats, jobs = _spark_jobs(
+        spark, lambda: run_with_checkpoint(spark, input_dir, out_dir, manifest_dir, "run-b")
+    )
+    assert stats == {"processed": 0, "skipped": 1}
+    assert jobs == 0
+    shutil.copy(later, input_dir)
+    stats, jobs = _spark_jobs(
+        spark, lambda: run_with_checkpoint(spark, input_dir, out_dir, manifest_dir, "run-b")
+    )
+    assert stats == {"processed": 1, "skipped": 1}
+    assert jobs == 2
+
+
+def test_checkpoint_manifest_driver_append(spark, transcripts_pdf, tmp_path):
+    """The driver-written manifest keeps Spark's schema, skips a temp file
+    left by a crash mid-append, and treats an empty dir as nothing done."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from htep_spark.plans.checkpoint import (
+        MANIFEST_COLUMNS,
+        MANIFEST_SCHEMA,
+        pending_units,
+        plan_units,
+    )
+
+    input_dir, later = _split_input(spark, transcripts_pdf, tmp_path)
+    out_dir, manifest_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    os.makedirs(manifest_dir)
+    assert pending_units(spark, input_dir, manifest_dir) == plan_units(input_dir)
+
+    run_with_checkpoint(spark, input_dir, out_dir, manifest_dir, "run-a")
+    manifest = spark.read.parquet(manifest_dir)
+    assert manifest.columns == MANIFEST_COLUMNS
+    assert [f.dataType.simpleString() for f in manifest.schema] == (
+        ["string"] * 4 + ["bigint"] * 5 + ["double", "string"]
+    )
+    (row,) = manifest.collect()
+    assert row["n_turns"] == sum(
+        pq.read_metadata(u["input_file"]).num_rows for u in plan_units(input_dir)
+    )
+    assert row["wall_sec"] >= 0
+    assert re.fullmatch(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ", row["finished_at"])
+
+    # a crash mid-append leaves a dot-prefixed temp file, here holding a
+    # "done" row for the held-back unit: neither reader may see it
+    (held_back,) = plan_units(later)
+    stray = {**row.asDict(), **held_back}
+    pq.write_table(
+        pa.Table.from_pylist([stray], schema=MANIFEST_SCHEMA),
+        os.path.join(manifest_dir, f".part-{held_back['partition_id']}-0.parquet.tmp"),
+    )
+    assert spark.read.parquet(manifest_dir).count() == 1
+    shutil.copy(later, input_dir)
+    (pending,) = pending_units(spark, input_dir, manifest_dir)
+    assert pending["partition_id"] == held_back["partition_id"]
+
+
+def test_job_rejects_hive_partitioned_input(spark, transcripts_pdf, tmp_path):
+    """A ``key=value/`` input dir has no top-level unit: the job must fail
+    loudly instead of reporting ok over zero units. An empty dir is still
+    zero units."""
+    import job
+    from htep_spark.plans.checkpoint import plan_units
+
+    input_dir = str(tmp_path / "hive")
+    spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA).write.partitionBy(
+        "role"
+    ).parquet(input_dir)
+    with pytest.raises(ValueError, match="hive-partitioned"):
+        job.main(["--input", input_dir, "--output", str(tmp_path / "hout")])
+    os.makedirs(tmp_path / "empty")
+    assert plan_units(str(tmp_path / "empty")) == []
 
 
 # One turn of each payload route, plus the empty and null edge cases.
